@@ -33,6 +33,7 @@ from aws_lambda_stream_processing_spark.registry import (
 from aws_lambda_stream_processing_spark.streaming.replay import (
     _scratch,
     _stream_shuffle_conf,
+    drain,
     events_stream,
     py_state_width,
     run_foreach_batch,
@@ -217,12 +218,6 @@ def q_stream_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     emit arithmetically (all boundaries have >1 h margin, so <= vs <
     strictness cannot flip any window).
     """
-    import tempfile
-
-    from aws_lambda_stream_processing_spark.streaming.replay import (
-        run_foreach_batch,
-    )
-
     d = split_events_dir(spark, sf_dir, [_B0_PRED])
     ckpt = _scratch("alsp_wm_ckpt_")
     # Finalized windows land in a parquet sink keyed by batch_id (idempotent
@@ -804,12 +799,6 @@ def q_stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sink (day count), so BOTH the data path and the metrics path
     are checked in one query. Telemetry equals data exactly because
     availableNow replays a frozen file list — no racing appends."""
-    from aws_lambda_stream_processing_spark.streaming.replay import (
-        _scratch,
-        _stream_shuffle_conf,
-        events_stream,
-    )
-    import shutil as _sh
     import uuid as _uuid
 
     stream = events_stream(spark, sf_dir)
@@ -817,24 +806,18 @@ def q_stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     name = "mem_" + _uuid.uuid4().hex[:12]
     ckpt = _scratch("alsp_metrics_ckpt_")
     with _stream_shuffle_conf(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
+            q = drain(
+                agg.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+            )
             # Telemetry must fail LOUDLY, never undercount (round-2
-            # advice): a timed-out drain or a saturated recentProgress
-            # ring buffer (bounded at numRecentProgressUpdates, default
-            # 100) would silently drop batches from the sum.
-            if not q.awaitTermination(120.0):
-                raise RuntimeError(
-                    "q_stream_progress_metrics: drain timed out; "
-                    "telemetry would undercount"
-                )
+            # advice): like a timed-out drain, a saturated recentProgress
+            # ring buffer (numRecentProgressUpdates, default 100) would
+            # silently drop batches from the sum.
             progs = list(q.recentProgress)
             cap = int(
                 spark.conf.get(
@@ -850,10 +833,8 @@ def q_stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             total_rows = sum(p["numInputRows"] for p in progs)
             n_days = spark.table(name).count()
         finally:
-            if q.isActive:
-                q.stop()
             spark.catalog.dropTempView(name)
-            _sh.rmtree(ckpt, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
     return spark.createDataFrame(
         [(total_rows, n_days)], "total_input_rows long, n_days long"
     )
@@ -1600,18 +1581,12 @@ def q_stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_type string, value double"
         ).parquet(src)
         agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-        q = (
+        drain(
             agg.writeStream.format("noop")
             .outputMode("complete")
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
-            .start()
         )
-        try:
-            q.awaitTermination(120)
-        finally:
-            if q.isActive:
-                q.stop()
         state = spark.read.format("statestore").load(ckpt)
         result = state.select(
             F.col("key.event_type").alias("event_type"),
@@ -1749,18 +1724,12 @@ def q_stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER},
         ):
-            q = (
+            drain(
                 agg.writeStream.format("noop")
                 .outputMode("complete")
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
-                .start()
             )
-            try:
-                q.awaitTermination(120)
-            finally:
-                if q.isActive:
-                    q.stop()
             state = spark.read.format("statestore").load(ckpt)
             result = state.select(
                 F.col("key.user_id").alias("user_id"),
@@ -2090,18 +2059,14 @@ def q_stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         for run in range(3):
-            q = (
+            drain(
                 src.selectExpr("timestamp AS hour", "value")
                 .writeStream.format("parquet")
                 .option("path", sink)
                 .option("checkpointLocation", ckpt)
                 .outputMode("append")
                 .trigger(once=True)
-                .start()
             )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
         agg = (
             spark.read.parquet(sink)
             .groupBy("hour", (F.col("value") % 7).alias("bucket"))
@@ -2261,7 +2226,7 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         # micro-batch machinery (~3.3 s); two runs are the minimum
         # that proves custom-offset persistence across a restart
         for _run in range(2):
-            q = (
+            drain(
                 spark.readStream.format("alsp_feed_sim")
                 .load()
                 .writeStream.format("parquet")
@@ -2269,11 +2234,7 @@ def q_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .option("checkpointLocation", ckpt)
                 .outputMode("append")
                 .trigger(once=True)
-                .start()
             )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
         agg = (
             spark.read.parquet(sink)
             .groupBy("shard")
@@ -2360,16 +2321,12 @@ def q_stream_foreach_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100).cast("bigint").alias("cents"),
         )
         with _stream_shuffle_conf(spark):
-            q = (
+            drain(
                 src.writeStream.foreach(_PartitionFileWriter(out_dir))
                 .outputMode("append")
                 .trigger(availableNow=True)
                 .option("checkpointLocation", out_dir + "/ckpt")
-                .start()
             )
-            q.awaitTermination(120)
-            if q.isActive:
-                q.stop()
         back = spark.read.schema(
             "event_id BIGINT, user_id BIGINT, cents BIGINT"
         ).csv(out_dir, pathGlobFilter="*.csv")
@@ -2652,23 +2609,13 @@ def q_stream_sink_python_datasource(
             )
             .coalesce(2)
         )
-        q = (
+        drain(
             src.writeStream.format("stream_manifest_sink")
             .option("path", out)
             .option("checkpointLocation", out + "/ckpt")
             .outputMode("append")
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(180)
-        if q.isActive:
-            # Fail fast: a partial manifest set would surface only as a
-            # confusing oracle mismatch downstream (ADVICE r8).
-            q.stop()
-            raise RuntimeError(
-                "q_stream_sink_python_datasource: stream did not drain "
-                "within 180 s — refusing to read partial manifests"
-            )
         committed: list[str] = []
         for fn in sorted(_os.listdir(out)):
             if fn.startswith("_MANIFEST_b") and not fn.endswith(".tmp"):

@@ -64,9 +64,10 @@ def drain_micro_batches(
     on_batch: Callable[[DataFrame, int], None] | None = None,
 ) -> list[tuple[int, int]]:
     """Run an UNBOUNDED streaming plan and stop after `n_batches` non-empty
-    micro-batches (or timeout). Returns [(batch_id, row_count), ...] for the
-    non-empty batches seen. This is the bounded-drain harness an unbounded
-    source needs — availableNow cannot terminate a rate stream."""
+    micro-batches; raise TimeoutError if fewer arrive within `timeout_s`.
+    Returns [(batch_id, row_count), ...] for the non-empty batches. This is
+    the bounded-drain harness an unbounded source needs — availableNow
+    (replay.drain) cannot terminate a rate stream."""
     spark = transformed.sparkSession
     done = threading.Event()
     seen: list[tuple[int, int]] = []
@@ -90,7 +91,11 @@ def drain_micro_batches(
             .start()
         )
         try:
-            done.wait(timeout_s)
+            if not done.wait(timeout_s):
+                raise TimeoutError(
+                    f"rate drain saw {len(seen)} of {n_batches} non-empty "
+                    f"micro-batches within {timeout_s:g} s"
+                )
         finally:
             q.stop()
             shutil.rmtree(ckpt, ignore_errors=True)

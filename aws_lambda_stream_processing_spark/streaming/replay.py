@@ -6,6 +6,11 @@ source and materialize the result — the Lambda-handler execution model
 checkpointing, exactly like an event-source mapping draining a shard; the
 memory sink stands in for the DynamoDB/S3 sink and is swapped for
 parquet/Kafka sinks in production (`foreachBatch` for arbitrary ones).
+
+`drain` is the engine's only start→await→stop path for a bounded trigger
+(availableNow or once). It stops the query, then raises TimeoutError naming
+it if it ran past DRAIN_TIMEOUT_S, or the query's own exception if a
+micro-batch failed — never partial rows.
 """
 
 from __future__ import annotations
@@ -19,6 +24,9 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
+
+from aws_lambda_stream_processing_spark.registry import track_cache
 
 # Explicit schema: streaming file sources cannot infer (and at 100 TB you
 # pin schemas anyway). The 2026-08-13 testdata regen stores ts as NAIVE
@@ -37,6 +45,10 @@ EVENTS_DDL = (
 # dropping to 8; 8 → 4 is worth another ~0.5 s/query, 4 → 2 flat — round-2
 # sweep). On a real cluster this is sized to cores × small factor.
 _STREAM_SHUFFLE_PARTITIONS = "4"
+
+# Deadline for every bounded drain, sized for the slowest rung
+# (q_stream_sink_python_datasource's Python sink).
+DRAIN_TIMEOUT_S = 180.0
 
 
 def _scratch(prefix: str) -> str:
@@ -88,43 +100,51 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def drain(writer: DataStreamWriter) -> StreamingQuery:
+    """Start a writer configured with a bounded trigger, wait for it to
+    finish and return the stopped query (its recentProgress stays
+    readable). Raises TimeoutError naming the query when it is still
+    running after DRAIN_TIMEOUT_S."""
+    q = writer.start()
+    try:
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            raise TimeoutError(
+                f"stream {q.name or q.id} did not drain within "
+                f"{DRAIN_TIMEOUT_S:g} s; refusing to return partial output"
+            )
+    finally:
+        q.stop()
+    return q
+
+
 def run_to_memory(
     transformed: DataFrame,
     output_mode: str = "append",
-    timeout_s: float = 120.0,
-    checkpoint: str | None = None,
     shuffle_partitions: str | None = None,
 ) -> DataFrame:
     """Execute a streaming plan with trigger(availableNow) into a memory
     sink; block until drained; return the materialized result as a batch DF.
 
-    Pass an explicit `checkpoint` to resume a previous run's offsets,
-    watermark and operator state (restart semantics); the caller then owns
-    its cleanup. Each run gets a fresh memory sink, so a resumed run's table
-    contains only rows emitted by that run. `shuffle_partitions` overrides
-    the default stream width (see py_state_width for the Python-stateful
-    rungs' wider setting).
+    `shuffle_partitions` overrides the default stream width (see
+    py_state_width for the Python-stateful rungs' wider setting). The
+    sink's temp view is dropped when the next registry query builds (the
+    cache janitor's contract: collect the frame before then).
     """
     spark = transformed.sparkSession
     name = "mem_" + uuid.uuid4().hex[:12]
-    own_ckpt = checkpoint is None
-    ckpt = checkpoint or _scratch("alsp_ckpt_")
+    ckpt = _scratch("alsp_ckpt_")
     with _stream_shuffle_conf(spark, shuffle_partitions):
-        q = (
-            transformed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination(timeout_s)
+            drain(
+                transformed.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+            )
         finally:
-            if q.isActive:
-                q.stop()
-            if own_ckpt:
-                shutil.rmtree(ckpt, ignore_errors=True)
+            shutil.rmtree(ckpt, ignore_errors=True)
+    track_cache(lambda: spark.catalog.dropTempView(name))
     return spark.table(name)
 
 
@@ -132,7 +152,6 @@ def run_foreach_batch(
     transformed: DataFrame,
     handler: Callable[[DataFrame, int], None],
     output_mode: str = "append",
-    timeout_s: float = 120.0,
     checkpoint: str | None = None,
 ) -> None:
     """The Lambda-handler equivalent: `handler(batch_df, batch_id)` runs once
@@ -143,18 +162,14 @@ def run_foreach_batch(
     own_ckpt = checkpoint is None
     ckpt = checkpoint or _scratch("alsp_ckpt_")
     with _stream_shuffle_conf(transformed.sparkSession):
-        q = (
-            transformed.writeStream.foreachBatch(handler)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
         try:
-            q.awaitTermination(timeout_s)
+            drain(
+                transformed.writeStream.foreachBatch(handler)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+            )
         finally:
-            if q.isActive:
-                q.stop()
             if own_ckpt:
                 shutil.rmtree(ckpt, ignore_errors=True)
 

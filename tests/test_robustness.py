@@ -315,8 +315,8 @@ def test_cache_janitor_releases_persisted_blocks(spark, registry):
     other's blocks over a 427-query sweep (the measured aged-suite
     bench tail). The registry janitor must (a) keep the shared edge
     memo alive across CONSECUTIVE graph queries — the sharing is the
-    point of the memo — and (b) leave ZERO persistent RDDs once a
-    foreign query builds."""
+    point of the memo — and (b) leave ZERO persistent RDDs and no
+    memory-sink view once a foreign query builds."""
 
     def n_persistent() -> int:
         return spark.sparkContext._jsc.getPersistentRDDs().size()
@@ -346,6 +346,14 @@ def test_cache_janitor_releases_persisted_blocks(spark, registry):
     registry["q_filter_cmp"].fn(spark, SF_DIR).collect()
     assert n_persistent() == 0
 
+    # and so are run_to_memory's mem_* sink views
+    registry["q_stream_output_modes"].fn(spark, SF_DIR).collect()
+    views = {t.name for t in spark.catalog.listTables()}
+    made = {v for v in views if v.startswith("mem_")}
+    assert made, "q_stream_output_modes registered no memory sink"
+    registry["q_filter_cmp"].fn(spark, SF_DIR).collect()
+    assert not made & {t.name for t in spark.catalog.listTables()}
+
 
 def test_rocksdb_provider_engages_and_conf_restored(spark):
     """q_stream_rocksdb_state is only a provider-independence proof if
@@ -363,7 +371,10 @@ def test_rocksdb_provider_engages_and_conf_restored(spark):
     from aws_lambda_stream_processing_spark.streaming.queries import (
         _ROCKSDB_PROVIDER,
     )
-    from aws_lambda_stream_processing_spark.streaming.replay import _scratch
+    from aws_lambda_stream_processing_spark.streaming.replay import (
+        _scratch,
+        drain,
+    )
 
     key = "spark.sql.streaming.stateStore.providerClass"
     try:
@@ -380,18 +391,12 @@ def test_rocksdb_provider_engages_and_conf_restored(spark):
         stream = spark.readStream.schema("k long, v long").parquet(src)
         agg = stream.groupBy("k").agg(F.sum("v").alias("s"))
         with _conf_ctx(spark, {key: _ROCKSDB_PROVIDER}):
-            q = (
+            drain(
                 agg.writeStream.format("noop")
                 .outputMode("complete")
                 .option("checkpointLocation", ckpt)
                 .trigger(availableNow=True)
-                .start()
             )
-            try:
-                q.awaitTermination(60)
-            finally:
-                if q.isActive:
-                    q.stop()
         zips = glob.glob(f"{ckpt}/state/**/*.zip", recursive=True)
         deltas = glob.glob(f"{ckpt}/state/**/*.delta", recursive=True)
         assert zips, "no RocksDB snapshot zips — provider did not engage"

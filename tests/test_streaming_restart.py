@@ -14,9 +14,15 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from aws_lambda_stream_processing_spark.streaming import replay
 from aws_lambda_stream_processing_spark.streaming.queries import SPLIT_DDL
+from aws_lambda_stream_processing_spark.streaming.rate_demo import (
+    drain_micro_batches,
+    rate_events_stream,
+)
 from aws_lambda_stream_processing_spark.streaming.replay import (
     _scratch,
+    drain,
     run_foreach_batch,
     split_events_dir,
 )
@@ -157,6 +163,30 @@ def test_stateful_agg_continues_across_restart(spark, scratch_dirs):
     assert final == expected, (
         "restarted aggregate diverged from the batch truth"
     )
+
+
+def test_timed_out_drains_raise_and_clean_up(spark, monkeypatch):
+    """A drain that runs out of time raises instead of returning partial
+    output, and leaves no running query and no owned checkpoint."""
+    import os
+    import time
+
+    made: list[str] = []
+    monkeypatch.setattr(replay, "DRAIN_TIMEOUT_S", 1.0)
+    monkeypatch.setattr(
+        replay, "_scratch", lambda p: made.append(_scratch(p)) or made[-1]
+    )
+    stream = replay.events_stream(spark, SF_DIR)
+    with pytest.raises(TimeoutError, match="did not drain"):
+        run_foreach_batch(stream, lambda _df, _bid: time.sleep(5))
+    assert not spark.streams.active
+    assert made and not any(os.path.exists(d) for d in made)
+
+    # the unbounded-source drain counts batches instead, same contract
+    rate = rate_events_stream(spark, rows_per_second=1)
+    with pytest.raises(TimeoutError, match="of 1000 non-empty"):
+        drain_micro_batches(rate, n_batches=1000, timeout_s=1.0)
+    assert not spark.streams.active
 
 
 def test_upsert_handler_is_idempotent_per_batch(spark):
@@ -341,7 +371,7 @@ def test_python_stream_sink_restart_does_not_duplicate(spark, scratch_dirs):
     scratch_dirs.append(input_dir)
 
     def run_once():
-        q = (
+        drain(
             spark.readStream.schema(SPLIT_DDL)
             .option("maxFilesPerTrigger", "1")
             .parquet(input_dir)
@@ -351,11 +381,7 @@ def test_python_stream_sink_restart_does_not_duplicate(spark, scratch_dirs):
             .option("path", out)
             .option("checkpointLocation", out + "/ckpt")
             .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(120)
-        if q.isActive:
-            q.stop()
 
     def committed_rows():
         rows = []
