@@ -24,6 +24,7 @@ from aws_lambda_stream_processing_spark.registry import (
     track_cache,
     tracked_local_checkpoint,
 )
+from aws_lambda_stream_processing_spark.session import pin_width, shuffle_scope
 from aws_lambda_stream_processing_spark.tables import load_table
 
 JACCARD_TAU = 0.95
@@ -736,19 +737,10 @@ def q_llm_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.sort_array(F.array_distinct(F.split("text", " "))).alias("s"),
     )
-    # The contraction + loop execute EAGERLY here (localCheckpoint), inside
-    # the builder — scope the shuffle width to the actual parallelism for
-    # their many small stages (a driver session's 200 default costs ~3× in
-    # task-scheduling overhead per round — measured 20 s vs 7 s at sf0.01).
-    saved_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(spark.sparkContext.defaultParallelism),
-    )
-    try:
+    # The contraction + loop execute EAGERLY here (localCheckpoint),
+    # inside the builder.
+    with shuffle_scope(spark, "eager"):
         member, labels = _cc_labels(spark, docs)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_sp)
     # un-contract: every doc inherits its representative's component label
     w = Window.partitionBy("cluster_id")
     return (
@@ -1743,12 +1735,9 @@ def q_llm_jaccard_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The all-pairs stage planned as a CartesianProduct over two
         # 1-partition (AQE-coalesced, bytes-tiny) agg outputs — the n²
         # popcount ran as ONE task (r12 plan audit). Pin the STREAMED
-        # side at the session's shuffle width and broadcast the other:
-        # W parallel tasks, one broadcast of the ≤65536-row mask table,
-        # identical pair multiset (guide §2.5 — AQE sizes by bytes and
-        # is blind to per-row compute).
-        _w = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        a = masks.repartition(_w).select(
+        # side and broadcast the other: parallel tasks, one broadcast of
+        # the ≤65536-row mask table, identical pair multiset.
+        a = pin_width(masks).select(
             F.col("rep").alias("ra"), F.col("m").alias("ma"),
             F.col("n").alias("nx"), F.col("cls").alias("cx"),
         )
@@ -1785,8 +1774,7 @@ def q_llm_jaccard_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(sized, "rep")
         )
         # same parallelization as the scalar path (see above)
-        _w = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        a = masks.repartition(_w).select(
+        a = pin_width(masks).select(
             F.col("rep").alias("ra"), F.col("ms").alias("ma"),
             F.col("n").alias("nx"), F.col("cls").alias("cx"),
         )

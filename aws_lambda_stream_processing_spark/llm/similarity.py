@@ -28,7 +28,8 @@ from aws_lambda_stream_processing_spark.registry import (
     track_cache,
     tracked_local_checkpoint,
 )
-from aws_lambda_stream_processing_spark.tables import load_table, pin_width
+from aws_lambda_stream_processing_spark.session import pin_width
+from aws_lambda_stream_processing_spark.tables import load_table
 
 
 def dot_double(a: Column | str, b: Column | str) -> Column:
@@ -118,7 +119,7 @@ def _block_pair_sims(emb: DataFrame, local_topk: int | None) -> DataFrame:
     )
     # pin_width: AQE coalesced the bytes-tiny exchange under this
     # Python GEMM stage to ONE partition, serializing all B(B+1)/2
-    # block kernels (guide §2.5; see tables.pin_width).
+    # block kernels (guide §2.5; see session.pin_width).
     return pin_width(replicated, "ga", "gb").groupBy("ga", "gb").applyInPandas(
         kernel, "vec_a long, vec_b long, sim double"
     )

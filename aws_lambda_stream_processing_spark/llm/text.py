@@ -18,6 +18,7 @@ from aws_lambda_stream_processing_spark.registry import (
     query,
     tracked_local_checkpoint,
 )
+from aws_lambda_stream_processing_spark.session import pin_width
 from aws_lambda_stream_processing_spark.tables import load_table
 
 
@@ -2678,11 +2679,9 @@ def q_llm_rouge_l(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The pairing window partitions by lang (5 values), so without this
     # the Python DP stage inherits ≤5 partitions and runs nearly serial
     # (guide §2.5 — parallelism starved by key cardinality, not bytes).
-    # Round-robin to the session's shuffle width: the kernel is per-row,
-    # the final orderBy pins output order, so placement is free to move.
-    pairs = pairs.repartition(
-        int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    )
+    # Round-robin pin: the kernel is per-row, the final orderBy pins
+    # output order, so placement is free to move.
+    pairs = pin_width(pairs)
     return pairs.mapInPandas(
         lcs_kernel,
         schema=(
@@ -2846,12 +2845,13 @@ def q_llm_bigram_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: 'cumulative distinct' never materializes running sets —
     each bigram contributes at its FIRST document (min doc_id per
     bigram: one hash-agg on the bigram key), so the curve is an ordinary
-    cumulative sum of per-doc new-bigram counts. Bigrams come from the
-    posexplode+lag form q_llm_neardup_shingle measured fastest; the
-    per-doc series then runs rank + two cumulative sums through the
-    dprefix two-phase helpers (the doc-grain relation scales with the
-    corpus — no partition-less window), and only rank-multiple-of-50
-    checkpoint rows survive to the output."""
+    cumulative sum of per-doc new-bigram counts. Bigrams zip adjacent
+    elements inside each doc's token array (no token-grain shuffle);
+    the per-doc series then runs rank + both cumulative sums through
+    ONE range shuffle, the fused dprefix two_phase_rank_cumsums (the
+    doc-grain relation scales with the corpus — no partition-less
+    window), and only rank-multiple-of-50 checkpoint rows survive to
+    the output."""
     from aws_lambda_stream_processing_spark.operators.dprefix import (
         two_phase_rank_cumsums,
     )

@@ -23,7 +23,8 @@ from pyspark.sql import functions as F
 
 from aws_lambda_stream_processing_spark.parity import fround
 from aws_lambda_stream_processing_spark.registry import query
-from aws_lambda_stream_processing_spark.tables import load_table, pin_width
+from aws_lambda_stream_processing_spark.session import pin_width
+from aws_lambda_stream_processing_spark.tables import load_table
 
 _N_BLOCKS = 8
 
@@ -130,7 +131,7 @@ def q_ts_zscore_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where((F.col("b") != F.col("p")) | (F.col("ga") == F.col("b")))
     )
     # pin_width: AQE coalesced this exchange to one partition and
-    # serialized the 36 block-GEMM kernels (guide §2.5; tables.pin_width)
+    # serialized the 36 block-GEMM kernels (guide §2.5; session.pin_width)
     out = pin_width(replicated, "ga", "gb").groupBy("ga", "gb").applyInPandas(
         _pairwise_rms,
         "user_a long, user_b long, n_aligned long, zdist_raw double",

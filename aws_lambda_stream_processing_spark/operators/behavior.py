@@ -22,6 +22,7 @@ from aws_lambda_stream_processing_spark.registry import (
     track_cache,
     tracked_local_checkpoint,
 )
+from aws_lambda_stream_processing_spark.session import shuffle_scope
 from aws_lambda_stream_processing_spark.tables import load_table
 
 
@@ -1079,17 +1080,10 @@ def q_events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Materialize the bounded |types|^2 matrix ONCE: each unrolled
     # iteration otherwise re-executes the data-scaled lag window (4x the
     # corpus scan; measured 10.5 s -> 5.4 s at sf0.01 under driver_sim).
-    # The eager checkpoint runs under defaultParallelism-scoped shuffle
-    # width (law 8: a hostile driver session pins 200 partitions).
-    saved_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(spark.sparkContext.defaultParallelism),
-    )
-    try:
+    # The eager checkpoint runs at the `eager` width (law 8: a hostile
+    # driver session pins 200 partitions).
+    with shuffle_scope(spark, "eager"):
         tr = tracked_local_checkpoint(trans.join(tot, "prev_type"))
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", saved_sp)
     states = tr.select(F.col("prev_type").alias("st")).distinct()
     k = states.agg(F.count("*").alias("k"))
     pi = states.crossJoin(F.broadcast(k)).select(

@@ -30,41 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from aws_lambda_stream_processing_spark.registry import tracked_local_checkpoint
-
-# Floor for the range-shuffle partition count: 8 keeps local-mode task
-# overhead low while still exercising the multi-partition merge in every
-# test run. The ACTUAL width is size-derived (see derived_parts) so a
-# corpus-scaled input widens the shuffle instead of funnelling 100 TB
-# through 8 range partitions (r12 verdict item 8; results are
-# partitioning-invariant by this module's contract, so width only
-# affects performance).
-DEFAULT_PARTS = 8
-
-# One range partition per this many estimated input bytes once the
-# input outgrows the floor (the guide §2.2 100 MB-1 GB band, low end,
-# because the local window holds whole rows).
-_PART_TARGET_BYTES = 128 * 1024 * 1024
-
-
-def derived_parts(df: DataFrame, n_parts: int | None) -> int:
-    """Range-shuffle width: the caller's explicit value, else
-    max(DEFAULT_PARTS, est_bytes / target) capped at 4x the session's
-    parallelism. Uses the optimizer's sizeInBytes ESTIMATE (no job);
-    grids/rollups stay at the floor, corpus-scaled inputs widen."""
-    if n_parts is not None:
-        return n_parts
-    try:
-        est = int(
-            df._jdf.queryExecution()  # noqa: SLF001
-            .optimizedPlan()
-            .stats()
-            .sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 - estimate is best-effort
-        est = 0
-    cap = 4 * df.sparkSession.sparkContext.defaultParallelism
-    return max(DEFAULT_PARTS, min(cap, -(-est // _PART_TARGET_BYTES)))
-
+from aws_lambda_stream_processing_spark.session import width
 
 OrderSpec = list[tuple[str, bool]]  # (column name, ascending)
 
@@ -93,10 +59,13 @@ def _offsets(parts: DataFrame, value: Column) -> DataFrame:
     )
 
 
-def ranged(
-    df: DataFrame, order: OrderSpec, n_parts: int | None = None
-) -> DataFrame:
+def ranged(df: DataFrame, order: OrderSpec) -> DataFrame:
     """Range-partition by the sort key and stamp the partition id.
+
+    Width is the session's `range` width over the optimizer's
+    sizeInBytes ESTIMATE (no job): grids/rollups stay at the floor,
+    corpus-scaled inputs widen instead of funnelling 100 TB through a
+    fixed count.
 
     After `repartitionByRange` every row in partition p sorts before every
     row in partition p+1 (AQE never re-splits an explicit numPartitions
@@ -126,8 +95,17 @@ def ranged(
     """
     from aws_lambda_stream_processing_spark.registry import track_cache
 
+    try:
+        est = int(
+            df._jdf.queryExecution()  # noqa: SLF001
+            .optimizedPlan()
+            .stats()
+            .sizeInBytes()
+        )
+    except Exception:  # noqa: BLE001 - estimate is best-effort
+        est = None
     out = df.repartitionByRange(
-        derived_parts(df, n_parts), *_sort_exprs(order)
+        width(df.sparkSession, "range", est), *_sort_exprs(order)
     ).withColumn(
         "__pid", F.spark_partition_id()
     ).cache()
@@ -140,7 +118,6 @@ def two_phase_row_number(
     order: OrderSpec,
     rn: str = "rn",
     total: str | None = None,
-    n_parts: int | None = None,
     materialize: bool = False,
 ) -> DataFrame:
     """Global 1-based row_number over `order` without a global sort task.
@@ -159,7 +136,7 @@ def two_phase_row_number(
     "zero persistent RDDs after a foreign build" flaky)."""
     if materialize:
         df = tracked_local_checkpoint(df, eager=False)
-    parts = ranged(df, order, n_parts)
+    parts = ranged(df, order)
     w_local = Window.partitionBy("__pid").orderBy(*_sort_exprs(order))
     local = parts.withColumn("__lrn", F.row_number().over(w_local))
     offs = _offsets(parts, F.lit(1))
@@ -180,7 +157,6 @@ def two_phase_cumsum(
     out: str = "cum",
     inclusive: bool = True,
     total: str | None = None,
-    n_parts: int | None = None,
     materialize: bool = False,
 ) -> DataFrame:
     """Global running sum of `value_col` in `order` (inclusive or
@@ -188,7 +164,7 @@ def two_phase_cumsum(
     including its `materialize` input-checkpoint option."""
     if materialize:
         df = tracked_local_checkpoint(df, eager=False)
-    parts = ranged(df, order, n_parts)
+    parts = ranged(df, order)
     end = 0 if inclusive else -1
     w_local = (
         Window.partitionBy("__pid")
@@ -214,7 +190,6 @@ def two_phase_rank_cumsums(
     order: OrderSpec,
     values: list[tuple[str, str]],
     rn: str | None = None,
-    n_parts: int | None = None,
     materialize: bool = False,
 ) -> DataFrame:
     """Global row_number plus any number of INCLUSIVE running sums over
@@ -230,7 +205,7 @@ def two_phase_rank_cumsums(
     exclusive offsets)."""
     if materialize:
         df = tracked_local_checkpoint(df, eager=False)
-    parts = ranged(df, order, n_parts)
+    parts = ranged(df, order)
     w_rn = Window.partitionBy("__pid").orderBy(*_sort_exprs(order))
     w_sum = w_rn.rowsBetween(Window.unboundedPreceding, 0)
     local = parts
@@ -283,7 +258,6 @@ def two_phase_cummax(
     order: OrderSpec,
     value_col: str,
     out: str = "cummax",
-    n_parts: int | None = None,
 ) -> DataFrame:
     """Global EXCLUSIVE running max of `value_col` in `order` (max over
     all strictly-earlier rows; NULL on the global first row), distributed
@@ -292,7 +266,7 @@ def two_phase_cummax(
     The skyline operator (q_sort_skyline) is the consumer: a point is
     Pareto-dominated iff its y is <= the running max of y over all
     better-x points."""
-    parts = ranged(df, order, n_parts)
+    parts = ranged(df, order)
     w_local = (
         Window.partitionBy("__pid")
         .orderBy(*_sort_exprs(order))

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aws_lambda_stream_processing_spark.registry import query
+from aws_lambda_stream_processing_spark.session import conf_scope
 from aws_lambda_stream_processing_spark.tables import load_table
 
 _SESSION_SINKS: set[str] = set()
@@ -542,37 +543,6 @@ _AQE_SKEW_CONFS = {
 }
 
 
-class _conf_ctx:
-    """Set/restore session confs around an eager execution (the engine
-    must leave the driver's session exactly as it found it)."""
-
-    def __init__(self, spark: SparkSession, confs: dict[str, str]):
-        self.spark, self.confs = spark, confs
-
-    def __enter__(self):
-        # Exception-safe: if a conf.set fails partway, __exit__ would
-        # never run (the with-body is never entered), so roll back the
-        # already-applied confs here before re-raising.
-        self.saved = {}
-        try:
-            for k, v in self.confs.items():
-                try:
-                    self.saved[k] = self.spark.conf.get(k)
-                except Exception:  # noqa: BLE001 - unset conf
-                    self.saved[k] = None
-                self.spark.conf.set(k, v)
-        except BaseException:
-            self.__exit__()
-            raise
-
-    def __exit__(self, *exc):
-        for k, v in self.saved.items():
-            if v is None:
-                self.spark.conf.unset(k)
-            else:
-                self.spark.conf.set(k, v)
-
-
 def _skewed_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deliberately skewed join: ~85% of events collapse onto key 0
     (user_id % 20 < 17), the rest spread over 996 cold keys; the dim is
@@ -644,7 +614,7 @@ def q_join_skew_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of guesses. At 100 TB this is the default posture — AQE on,
     skew thresholds at defaults — and the manual ladder is the escape
     hatch."""
-    with _conf_ctx(spark, _AQE_SKEW_CONFS):
+    with conf_scope(spark, _AQE_SKEW_CONFS):
         df = _skewed_join_frame(spark, sf_dir)
         rows = df.collect()
     return spark.createDataFrame(rows, df.schema)
@@ -920,7 +890,7 @@ def q_scale_aqe_coalesce(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query. Runs EAGERLY inside the restored conf context
     (q_join_skew_aqe discipline); exact integer result, identical to
     the static plan's."""
-    with _conf_ctx(spark, _AQE_COALESCE_CONFS):
+    with conf_scope(spark, _AQE_COALESCE_CONFS):
         per_user = (
             load_table(spark, sf_dir, "events")
             .groupBy("user_id")
@@ -1056,7 +1026,7 @@ def q_scale_aqe_runtime_broadcast(
     filtered dim: the 10 MB runtime check is made against reality, not
     against a cardinality guess that degrades with every stacked
     filter."""
-    with _conf_ctx(spark, _AQE_RUNTIME_BHJ_CONFS):
+    with conf_scope(spark, _AQE_RUNTIME_BHJ_CONFS):
         df = _runtime_bhj_frame(spark, sf_dir)
         rows = df.collect()
     return spark.createDataFrame(rows, df.schema)
@@ -1190,7 +1160,7 @@ def q_scale_runtime_bloom_filter(
     pass extra rows INTO the exact join), pinned by the exact oracle,
     and the injection is plan-gated in both directions
     (tests/test_plans.py)."""
-    with _conf_ctx(spark, _RUNTIME_BLOOM_CONFS):
+    with conf_scope(spark, _RUNTIME_BLOOM_CONFS):
         df = _runtime_bloom_frame(spark, sf_dir)
         rows = df.collect()
     return spark.createDataFrame(rows, df.schema)
@@ -1322,7 +1292,7 @@ def q_scale_manifest_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NO min/max statistics — the manifest would see None and could never
     # skip. TIMESTAMP_MICROS is the stats-bearing (and modern-reader)
     # encoding; at 100 TB this conf is table-format policy, not a tweak.
-    with _conf_ctx(
+    with conf_scope(
         spark,
         {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"},
     ):

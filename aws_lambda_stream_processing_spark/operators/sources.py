@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aws_lambda_stream_processing_spark.registry import query, track_cache
+from aws_lambda_stream_processing_spark.session import conf_scope
 from aws_lambda_stream_processing_spark.tables import load_table
 
 # NOTE: streaming.replay is imported INSIDE the two stream-flavored ops,
@@ -1163,7 +1164,6 @@ def q_scan_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests, so the flag is proven load-bearing, not decorative."""
     from aws_lambda_stream_processing_spark.operators.scale import (
         _cleanup_sink_at_exit,
-        _conf_ctx,
     )
 
     e = load_table(spark, sf_dir, "events")
@@ -1177,7 +1177,7 @@ def q_scan_ignore_corrupt_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).parquet(out)
     with open(os.path.join(out, "part-corrupt.parquet"), "wb") as fh:
         fh.write(b"PAR1 this is not a parquet file \x00\xff garbage")
-    with _conf_ctx(spark, {"spark.sql.files.ignoreCorruptFiles": "true"}):
+    with conf_scope(spark, {"spark.sql.files.ignoreCorruptFiles": "true"}):
         df = (
             spark.read.parquet(out)
             .groupBy("event_type")
@@ -1216,12 +1216,11 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     other type still holds only the early window, exactly the oracle's
     disjunction. The reread is partition-pruned the same as
     q_sink_partitioned. The mode is conf-scoped and restored
-    (_conf_ctx): a backfill job sets it per write, not session-wide.
+    (conf_scope): a backfill job sets it per write, not session-wide.
     At 100 TB this is how a late-arriving day is re-landed without
     rewriting (or locking) the other 10,000 partitions."""
     from aws_lambda_stream_processing_spark.operators.scale import (
         _cleanup_sink_at_exit,
-        _conf_ctx,
     )
 
     e = load_table(spark, sf_dir, "events").select(
@@ -1237,7 +1236,7 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     _cleanup_sink_at_exit(out)
     early = e.where(F.col("ts") < "2024-01-21 00:00:00")
     backfill = e.where(F.col("event_type").isin("purchase", "click"))
-    with _conf_ctx(
+    with conf_scope(
         spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
     ):
         # static-mode first write is fine (it creates the layout);

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from aws_lambda_stream_processing_spark.parity import DEC
 from aws_lambda_stream_processing_spark.registry import query
+from aws_lambda_stream_processing_spark.session import pin_width
 from aws_lambda_stream_processing_spark.tables import load_table
 
 def _w_user():
@@ -263,17 +264,10 @@ def q_win_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("bucket") + 1).alias("bucket"),
     ).withColumn("is_owner", F.lit(False))
     both = rows.withColumn("is_owner", F.lit(True)).unionByName(donors)
-    # Pin the window's exchange at the session shuffle width: AQE's
-    # byte-based coalescing folded the ~280 fine (event_type, bucket)
-    # partitions back into ONE post-shuffle partition at bench scale,
-    # serializing exactly the O(n·|frame|) re-aggregation this rung's
-    # two-phase design exists to parallelize (guide §2.5; r12 audit).
-    # The explicit numPartitions repartition is exempt from coalescing
-    # and the window reuses its hash partitioning — no extra exchange.
-    both = both.repartition(
-        int(spark.conf.get("spark.sql.shuffle.partitions")),
-        "event_type", "bucket",
-    )
+    # Pin the window's exchange: AQE folded the ~280 fine (event_type,
+    # bucket) partitions into ONE, serializing the O(n·|frame|)
+    # re-aggregation this rung's two-phase design parallelizes.
+    both = pin_width(both, "event_type", "bucket")
     # Frame bound stays on the RAW double (value - 10 in IEEE arithmetic,
     # exactly the oracle's boundary semantics; the IEEE error ~1e-13 is
     # 11 orders below the 0.01 value grid, so the two-bucket cover holds).

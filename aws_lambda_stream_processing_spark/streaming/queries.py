@@ -30,12 +30,11 @@ from aws_lambda_stream_processing_spark.registry import (
     query,
     tracked_local_checkpoint,
 )
+from aws_lambda_stream_processing_spark.session import conf_scope, shuffle_scope
 from aws_lambda_stream_processing_spark.streaming.replay import (
     _scratch,
-    _stream_shuffle_conf,
     drain,
     events_stream,
-    py_state_width,
     run_foreach_batch,
     run_to_memory,
     split_events_dir,
@@ -528,11 +527,11 @@ def q_stream_custom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
         # Python-stateful stage: per-key pandas kernels dominate, so run
-        # at the wider py_state_width instead of the JVM-state default
+        # at the wider python_stream width instead of the JVM-state one
         return run_to_memory(
             out,
             output_mode="append",
-            shuffle_partitions=py_state_width(spark),
+            width_kind="python_stream",
         )
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -805,7 +804,7 @@ def q_stream_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy(F.to_date("ts").alias("day")).count()
     name = "mem_" + _uuid.uuid4().hex[:12]
     ckpt = _scratch("alsp_metrics_ckpt_")
-    with _stream_shuffle_conf(spark):
+    with shuffle_scope(spark, "stream"):
         try:
             q = drain(
                 agg.writeStream.format("memory")
@@ -1699,14 +1698,12 @@ def q_stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     and decodes RocksDB snapshot zips as transparently as HDFS
     .delta files (tests assert the .zip artifacts, so the conf is
     proven load-bearing). The provider conf is set/restored around
-    the run via _conf_ctx — the driver's session leaves untouched.
+    the run via conf_scope — the driver's session leaves untouched.
     At 100 TB of keyed state RocksDB is the only posture that works:
     state spills to local SSD instead of executor heap, changelog
     checkpointing bounds per-batch upload to the delta, and the
     memory-bound HDFS provider becomes the thing you migrate OFF —
     this rung is that migration's correctness proof in miniature."""
-    from aws_lambda_stream_processing_spark.operators.scale import _conf_ctx
-
     src = _scratch("alsp_rocks_src_")
     ckpt = _scratch("alsp_rocks_ckpt_")
     try:
@@ -1720,7 +1717,7 @@ def q_stream_rocksdb_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg = stream.groupBy("user_id").agg(
             F.count("*").alias("n"), F.sum("cents").alias("cents")
         )
-        with _conf_ctx(
+        with conf_scope(
             spark,
             {"spark.sql.streaming.stateStore.providerClass": _ROCKSDB_PROVIDER},
         ):
@@ -2003,7 +2000,7 @@ def q_stream_state_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
         return run_to_memory(
             out,
             output_mode="append",
-            shuffle_partitions=py_state_width(spark),
+            width_kind="python_stream",
         )
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -2320,7 +2317,7 @@ def q_stream_foreach_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id", "user_id",
             F.round(F.col("value") * 100).cast("bigint").alias("cents"),
         )
-        with _stream_shuffle_conf(spark):
+        with shuffle_scope(spark, "stream"):
             drain(
                 src.writeStream.foreach(_PartitionFileWriter(out_dir))
                 .outputMode("append")

@@ -23,10 +23,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from aws_lambda_stream_processing_spark.streaming.replay import (
-    _scratch,
-    _stream_shuffle_conf,
-)
+from aws_lambda_stream_processing_spark.session import shuffle_scope
+from aws_lambda_stream_processing_spark.streaming.replay import _scratch
 
 EVENT_TYPES = ("click", "view", "purchase", "signup", "error")
 
@@ -82,7 +80,7 @@ def drain_micro_batches(
             done.set()
 
     ckpt = _scratch("alsp_rate_ckpt_")
-    with _stream_shuffle_conf(spark):
+    with shuffle_scope(spark, "stream"):
         q = (
             transformed.writeStream.foreachBatch(handler)
             .outputMode("update")

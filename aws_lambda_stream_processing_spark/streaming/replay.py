@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from aws_lambda_stream_processing_spark.registry import track_cache
+from aws_lambda_stream_processing_spark.session import WidthKind, shuffle_scope
 
 # Explicit schema: streaming file sources cannot infer (and at 100 TB you
 # pin schemas anyway). The 2026-08-13 testdata regen stores ts as NAIVE
@@ -38,13 +39,6 @@ EVENTS_DDL = (
     "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, "
     "value DOUBLE, props STRING"
 )
-
-# Stateful streaming operators create one StateStore instance per shuffle
-# partition per operator; at this event volume 32 stores per micro-batch is
-# pure overhead (measured 7.3 s → 2.5 s on the stream-stream join by
-# dropping to 8; 8 → 4 is worth another ~0.5 s/query, 4 → 2 flat — round-2
-# sweep). On a real cluster this is sized to cores × small factor.
-_STREAM_SHUFFLE_PARTITIONS = "4"
 
 # Deadline for every bounded drain, sized for the slowest rung
 # (q_stream_sink_python_datasource's Python sink).
@@ -58,35 +52,6 @@ def _scratch(prefix: str) -> str:
     cluster this is the RocksDB local dir + an object-store checkpoint."""
     base = "/dev/shm" if os.path.isdir("/dev/shm") else None
     return tempfile.mkdtemp(prefix=prefix, dir=base)
-
-
-def py_state_width(spark: SparkSession) -> str:
-    """Shuffle width for PYTHON-stateful streams (applyInPandasWithState).
-
-    The r2 width ladder that picked 4 measured JVM state-store rungs,
-    where per-partition store instances dominate. A Python-stateful
-    stage's cost is the per-key pandas handler instead, and width 4
-    runs those kernels on 4 cores: r12 interleaved ladder on
-    q_stream_custom_state at sf0.1 (min-of-3 noop) — 5.2 s @4,
-    3.5 s @8, 2.7 s @16. Derived from the session (the driver benches
-    at lower core counts too), capped where the store-instance
-    overhead catches up."""
-    return str(max(4, min(spark.sparkContext.defaultParallelism, 16)))
-
-
-class _stream_shuffle_conf:
-    """Scoped shuffle-partition override for the duration of a stream run."""
-
-    def __init__(self, spark: SparkSession, width: str | None = None):
-        self._spark = spark
-        self._width = width or _STREAM_SHUFFLE_PARTITIONS
-
-    def __enter__(self) -> None:
-        self._saved = self._spark.conf.get("spark.sql.shuffle.partitions")
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._width)
-
-    def __exit__(self, *exc) -> None:
-        self._spark.conf.set("spark.sql.shuffle.partitions", self._saved)
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -120,20 +85,20 @@ def drain(writer: DataStreamWriter) -> StreamingQuery:
 def run_to_memory(
     transformed: DataFrame,
     output_mode: str = "append",
-    shuffle_partitions: str | None = None,
+    width_kind: WidthKind = "stream",
 ) -> DataFrame:
     """Execute a streaming plan with trigger(availableNow) into a memory
     sink; block until drained; return the materialized result as a batch DF.
 
-    `shuffle_partitions` overrides the default stream width (see
-    py_state_width for the Python-stateful rungs' wider setting). The
-    sink's temp view is dropped when the next registry query builds (the
-    cache janitor's contract: collect the frame before then).
+    The run's shuffle width is the session's `width_kind` width
+    (Python-stateful rungs pass "python_stream"). The sink's temp view is
+    dropped when the next registry query builds (the cache janitor's
+    contract: collect the frame before then).
     """
     spark = transformed.sparkSession
     name = "mem_" + uuid.uuid4().hex[:12]
     ckpt = _scratch("alsp_ckpt_")
-    with _stream_shuffle_conf(spark, shuffle_partitions):
+    with shuffle_scope(spark, width_kind):
         try:
             drain(
                 transformed.writeStream.format("memory")
@@ -161,7 +126,7 @@ def run_foreach_batch(
     offsets/watermark/state across runs (caller owns its cleanup)."""
     own_ckpt = checkpoint is None
     ckpt = checkpoint or _scratch("alsp_ckpt_")
-    with _stream_shuffle_conf(transformed.sparkSession):
+    with shuffle_scope(transformed.sparkSession, "stream"):
         try:
             drain(
                 transformed.writeStream.foreachBatch(handler)

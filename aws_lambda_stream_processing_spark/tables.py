@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from aws_lambda_stream_processing_spark.session import width
+
 TABLES = [
     "region",
     "nation",
@@ -80,30 +82,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if os.environ.get("ALSP_CACHE_TABLES") == "1":
         # The driver's parquet fixtures are single-file, single-ROW-GROUP
         # tables, so a scan can never split them: every map-side stage
-        # (JVM codegen AND mapInPandas/applyInPandas kernels) of every
-        # query ran on ONE task until its first exchange (r12 audit:
-        # getNumPartitions == 1 for 9 of the 10 cached tables at sf0.1).
-        # Guide §2.5 "input skew — one huge unsplittable file →
-        # repartition immediately after the read": spread the fact
-        # tables ONCE, at cache materialization (outside the bench
-        # clock; the suite warms the cache before timing). Round-robin
+        # ran on ONE task until its first exchange (r12 audit). Spread
+        # the fact tables ONCE, at cache materialization (outside the
+        # bench clock), to the session's `cache` width. Round-robin
         # repartition is deterministic here (sortBeforeRepartition on a
         # deterministic single-file scan) and results are
-        # partitioning-invariant (full oracle sweep green on this
-        # change). The r12 blanket `defaultParallelism` width was the
-        # round's one regression: 32 partitions on kilobyte tables gave
-        # every sub-second query a 32-task map stage (~0.2-0.4 s of
-        # scheduling each, ~130 s across the suite; the driver's 8-core
-        # rerun at width 8 beat the 32-core run by 18%). The width must
-        # derive from the DATA, capped at the session's parallelism: a
-        # 100 TB table still spreads to every core, while a 2 MB fixture
-        # gets 1-2 partitions. Compute-bound downstream stages whose
-        # per-row cost is invisible to a bytes heuristic (Python
-        # kernels, O(frame) windows) pin their own width at the operator
-        # (`pin_width`), which is the correct layer for that. The
-        # broadcast dims stay single-partition (they are a few KB).
+        # partitioning-invariant. The broadcast dims stay
+        # single-partition (they are a few KB).
         if name not in BROADCAST_TABLES:
-            w = _spread_width(spark, f"{sf_dir}/{name}.parquet")
+            w = width(spark, "cache", _disk_bytes(f"{sf_dir}/{name}.parquet"))
             if w > 1:
                 df = df.repartition(w)
         df = df.cache()
@@ -115,71 +102,18 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame
     return [load_table(spark, sf_dir, n) for n in names]
 
 
-# Cache-spread sizing: one cached partition per ~2 MiB of on-disk parquet
-# (zstd-compressed parquet expands ~5-10x in memory, so this is ~10-20 MB
-# of in-memory columnar batch per task — enough work to amortize task
-# scheduling, small enough to keep map stages parallel). Parameterised so
-# a deployment can align it with its executor sizing; the CAP at
-# defaultParallelism is what matters at 100 TB (any real fact table blows
-# past the target and spreads to every core), the TARGET is what matters
-# at calibration scale (kilobyte fixtures stay at 1-2 partitions instead
-# of paying a full-width task wave per query).
-_SPREAD_TARGET_BYTES = 2 * 1024 * 1024
-
-
-def _spread_width(spark: SparkSession, path: str) -> int:
-    """Partition count for a cached table: ceil(bytes / target), capped
-    at the session's parallelism, floored at 1."""
-    import math
+def _disk_bytes(path: str) -> int:
+    """On-disk bytes of a parquet file or dataset dir (0 if unreadable)."""
     import os
 
-    env = os.environ.get("ALSP_CACHE_SPREAD_TARGET_BYTES")
-    target = int(env) if env else _SPREAD_TARGET_BYTES
     try:
         if os.path.isdir(path):
-            nbytes = sum(
+            return sum(
                 os.path.getsize(os.path.join(root, f))
                 for root, _, files in os.walk(path)
                 for f in files
                 if not f.startswith(("_", "."))
             )
-        else:
-            nbytes = os.path.getsize(path)
+        return os.path.getsize(path)
     except OSError:
-        nbytes = 0
-    # Floor 4 (env-overridable): a width-1 cache serializes every
-    # per-row compute stage over that table (measured r13: the 14
-    # JSON/XML/edit-distance/shingle rungs over the 0.6-2 MB
-    # events/documents fixtures summed 17.7 s at floor 1 vs 9.2 s at
-    # floor 4, while a 16-query sub-second control sample was unchanged
-    # — and the r12 driver's own 8-core rerun showed width <= 8 costs
-    # the small queries nothing). Capped at the session's parallelism
-    # so a 2-core driver rerun still gets width 2.
-    cap = spark.sparkContext.defaultParallelism
-    floor = int(os.environ.get("ALSP_CACHE_SPREAD_FLOOR", "4"))
-    return max(1, min(cap, max(floor, math.ceil(nbytes / max(1, target)))))
-
-
-def pin_width(df: DataFrame, *keys: str) -> DataFrame:
-    """Repartition to the session's shuffle width ahead of a stage whose
-    per-row cost AQE cannot see.
-
-    AQE's partition coalescing sizes post-shuffle partitions by BYTES
-    (advisoryPartitionSizeInBytes / minPartitionSize) — correct for JVM
-    relational stages, but blind to stages whose cost is per-row COMPUTE:
-    Python kernels (applyInPandas / mapInPandas GEMM blocks) and
-    O(|frame|) window re-aggregations. On calibration-sized inputs AQE
-    folded those exchanges to ONE partition and serialized the stage
-    (r12 audit: q_udf_grouped_map 5.2 s serial vs 1.7 s pinned;
-    q_llm_jaccard_spectrum's n² popcount ran as one task). An explicit
-    numPartitions repartition is exempt from AQE coalescing, and a
-    downstream groupBy/cogroup/window on the same keys reuses the hash
-    partitioning, so no second exchange appears (guide §2.4/§2.5). Width
-    follows spark.sql.shuffle.partitions — cores locally, operator-sized
-    on a cluster. With no keys the repartition is round-robin (for
-    per-row kernels where placement is free).
-    """
-    from pyspark.sql import functions as F
-
-    w = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(w, *[F.col(k) for k in keys])
+        return 0

@@ -23,33 +23,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udf
 
 from aws_lambda_stream_processing_spark.registry import query
+from aws_lambda_stream_processing_spark.session import pin_width
 from aws_lambda_stream_processing_spark.tables import load_table
 
 
 # NOTE: udf/pandas_udf decorators parse their DDL return type eagerly and
 # need an active SparkSession — so every UDF below is defined inside its
 # query builder, not at module import time.
-
-
-def _pin_width(df: DataFrame, *keys: str) -> DataFrame:
-    """Pin the exchange feeding a Python-evaluated stage at the session's
-    configured shuffle width.
-
-    AQE's partition coalescing sizes post-shuffle partitions by BYTES
-    (advisoryPartitionSizeInBytes), which is the right call for JVM
-    stages but blind to per-row Python cost: these rungs' grouped inputs
-    are a couple of MB, so AQE folded every grouped-map/UDAF/pandas-
-    window exchange to ONE partition and the whole Python stage ran
-    serially (guide §2.5 — measured r12: q_udf_grouped_map noop-sink
-    5.2 s serialized vs 1.7 s at session width). An explicit
-    numPartitions repartition is exempt from AQE coalescing, and the
-    downstream groupBy/cogroup/window on the same keys reuses its hash
-    partitioning, so no second exchange appears (guide §2.4). Width
-    comes from spark.sql.shuffle.partitions — cores locally,
-    operator-sized on a cluster; nothing local-mode-specific.
-    """
-    w = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return df.repartition(w, *[F.col(k) for k in keys])
 
 
 @query(
@@ -129,7 +109,7 @@ def q_udaf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     weighted = e.select(
         "user_id", "value", (F.col("event_id") % 10 + 1).alias("w")
     )
-    return _pin_width(weighted, "user_id").groupBy("user_id").agg(
+    return pin_width(weighted, "user_id").groupBy("user_id").agg(
         F.round(weighted_mean("value", "w"), 4).alias("wmean")
     )
 
@@ -174,7 +154,7 @@ def q_udf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     kernels SQL can't express (model scoring, scipy, ...)."""
     e = load_table(spark, sf_dir, "events")
     return (
-        _pin_width(e.select("user_id", "event_id", "value"), "user_id")
+        pin_width(e.select("user_id", "event_id", "value"), "user_id")
         .groupBy("user_id")
         .applyInPandas(
             _minmax_normalize,
@@ -295,8 +275,8 @@ def q_udf_cogrouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     out = (
-        _pin_width(e, "user_id").groupBy("user_id")
-        .cogroup(_pin_width(o, "user_id").groupBy("user_id"))
+        pin_width(e, "user_id").groupBy("user_id")
+        .cogroup(pin_width(o, "user_id").groupBy("user_id"))
         .applyInPandas(
             merge,
             "user_id long, n_events long, event_cents long,"
@@ -628,7 +608,7 @@ def q_udf_pandas_over_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     def frame_cents(v: pd.Series) -> int:
         return int((v * 100).round().astype("int64").sum())
 
-    e = _pin_width(
+    e = pin_width(
         load_table(spark, sf_dir, "events").where(
             (F.col("event_type") == "purchase")
             & (F.col("user_id") % 10 == 3)

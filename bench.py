@@ -157,8 +157,8 @@ def _merge_runs(runs: list[dict]) -> tuple[dict[str, float], dict, list]:
 
 
 def _print_artifact(obj: dict) -> None:
-    """Bounded per-query chunk lines, the full artifact line, then the
-    compact driver-parseable trailer (always the LAST stdout line).
+    """The full artifact line, then bounded per-query chunk lines, then
+    the compact driver-parseable trailer (always the LAST stdout line).
 
     The chunk lines are r12 verdict item 3: the driver harness keeps a
     stdout TAIL, and the single 537-entry artifact line truncates

@@ -698,11 +698,11 @@ def test_aqe_skew_join_splits_hot_partition(spark, registry):
     the plain (broadcast) execution exactly."""
     from aws_lambda_stream_processing_spark.operators.scale import (
         _AQE_SKEW_CONFS,
-        _conf_ctx,
         _skewed_join_frame,
     )
+    from aws_lambda_stream_processing_spark.session import conf_scope
 
-    with _conf_ctx(spark, _AQE_SKEW_CONFS):
+    with conf_scope(spark, _AQE_SKEW_CONFS):
         df = _skewed_join_frame(spark, SF_DIR)
         skewed_rows = sorted(map(tuple, df.collect()))
         plan = plan_string(df)
@@ -721,16 +721,16 @@ def test_aqe_runtime_broadcast_converts_smj(spark, registry):
     results (the q_join_skew_aqe gate discipline)."""
     from aws_lambda_stream_processing_spark.operators.scale import (
         _AQE_RUNTIME_BHJ_CONFS,
-        _conf_ctx,
         _runtime_bhj_frame,
     )
+    from aws_lambda_stream_processing_spark.session import conf_scope
 
     def final_plan(df):
         # adaptive explain prints Final Plan then Initial Plan; the
         # conversion claim is about what actually EXECUTED
         return plan_string(df).split("== Initial Plan ==")[0]
 
-    with _conf_ctx(spark, _AQE_RUNTIME_BHJ_CONFS):
+    with conf_scope(spark, _AQE_RUNTIME_BHJ_CONFS):
         df = _runtime_bhj_frame(spark, SF_DIR)
         converted_rows = sorted(map(tuple, df.collect()))
         plan = final_plan(df)
@@ -738,7 +738,7 @@ def test_aqe_runtime_broadcast_converts_smj(spark, registry):
     assert "SortMergeJoin" not in plan, plan[:3000]
     off = dict(_AQE_RUNTIME_BHJ_CONFS)
     off["spark.sql.adaptive.autoBroadcastJoinThreshold"] = "-1"
-    with _conf_ctx(spark, off):
+    with conf_scope(spark, off):
         df2 = _runtime_bhj_frame(spark, SF_DIR)
         static_rows = sorted(map(tuple, df2.collect()))
         plan2 = final_plan(df2)
@@ -753,11 +753,11 @@ def test_runtime_bloom_filter_injected(spark, registry):
     suppression) neither appears — two directions, identical results."""
     from aws_lambda_stream_processing_spark.operators.scale import (
         _RUNTIME_BLOOM_CONFS,
-        _conf_ctx,
         _runtime_bloom_frame,
     )
+    from aws_lambda_stream_processing_spark.session import conf_scope
 
-    with _conf_ctx(spark, _RUNTIME_BLOOM_CONFS):
+    with conf_scope(spark, _RUNTIME_BLOOM_CONFS):
         df = _runtime_bloom_frame(spark, SF_DIR)
         on_rows = sorted(map(tuple, df.collect()))
         plan = df._jdf.queryExecution().toString()
@@ -765,7 +765,7 @@ def test_runtime_bloom_filter_injected(spark, registry):
     assert "might_contain" in plan, plan[:3000]
     off = dict(_RUNTIME_BLOOM_CONFS)
     off["spark.sql.optimizer.runtime.bloomFilter.enabled"] = "false"
-    with _conf_ctx(spark, off):
+    with conf_scope(spark, off):
         df2 = _runtime_bloom_frame(spark, SF_DIR)
         off_rows = sorted(map(tuple, df2.collect()))
         plan2 = df2._jdf.queryExecution().toString()
@@ -918,8 +918,8 @@ def test_aqe_coalesce_merges_shuffle_partitions(spark, registry):
     identical either way."""
     from aws_lambda_stream_processing_spark.operators.scale import (
         _AQE_COALESCE_CONFS,
-        _conf_ctx,
     )
+    from aws_lambda_stream_processing_spark.session import conf_scope
     from aws_lambda_stream_processing_spark.tables import load_table
 
     from pyspark.sql import functions as F
@@ -932,14 +932,14 @@ def test_aqe_coalesce_merges_shuffle_partitions(spark, registry):
         )
         return per_user.agg(F.sum("n").alias("n_events"))
 
-    with _conf_ctx(spark, _AQE_COALESCE_CONFS):
+    with conf_scope(spark, _AQE_COALESCE_CONFS):
         df = frame()
         on_rows = df.collect()
         assert "coalesced" in plan_string(df), plan_string(df)[:2000]
 
     off_confs = dict(_AQE_COALESCE_CONFS)
     off_confs["spark.sql.adaptive.coalescePartitions.enabled"] = "false"
-    with _conf_ctx(spark, off_confs):
+    with conf_scope(spark, off_confs):
         df2 = frame()
         off_rows = df2.collect()
         assert "coalesced" not in plan_string(df2)

@@ -310,7 +310,7 @@ def test_dprefix_matches_global_window(spark, rows, k):
     order = [("v", True), ("id", True)]
     sort = [F.col("v").asc(), F.col("id").asc()]
 
-    got = two_phase_row_number(df, order, rn="rn", total="n", n_parts=4)
+    got = two_phase_row_number(df, order, rn="rn", total="n")
     got = got.select(
         "id", "rn", "n", ntile_from_rank("rn", "n", k).alias("t")
     )
@@ -334,7 +334,7 @@ def test_dprefix_matches_global_window(spark, rows, k):
     )
     assert bad == 0
 
-    gc = two_phase_cumsum(df, order, "x", out="c", inclusive=True, n_parts=4)
+    gc = two_phase_cumsum(df, order, "x", out="c", inclusive=True)
     ec = df.select(
         "id",
         F.sum("x")
@@ -393,7 +393,7 @@ def test_grouped_base_subtraction_matches_partition_window(spark, rows):
     ).repartition(5)
     order = [("g", True), ("v", True), ("id", True)]
 
-    ranked = two_phase_row_number(df, order, rn="grn", n_parts=4)
+    ranked = two_phase_row_number(df, order, rn="grn")
     base = ranked.groupBy("g").agg(F.min("grn").alias("g0"))
     got_rn = ranked.join(F.broadcast(base), "g").select(
         "id", (F.col("grn") - F.col("g0") + 1).alias("rk")
@@ -414,7 +414,7 @@ def test_grouped_base_subtraction_matches_partition_window(spark, rows):
     )
     assert bad == 0
 
-    c = two_phase_cumsum(df, order, "x", out="gc", inclusive=True, n_parts=4)
+    c = two_phase_cumsum(df, order, "x", out="gc", inclusive=True)
     cbase = c.groupBy("g").agg(
         F.min(F.col("gc") - F.col("x")).alias("b0")
     )

@@ -109,74 +109,6 @@ def test_partsupp_memo_is_shared_across_tpch_consumers(spark, registry):
     assert "InMemoryTableScan" in plan9, plan9[:1500]
 
 
-def test_cached_tables_are_width_spread(spark):
-    """tables.load_table under the ALSP_CACHE_TABLES=1 (bench/driver)
-    posture must spread the single-row-group fact parquet to a
-    SIZE-DERIVED width — the r12 audit found every map stage of every
-    query running on ONE task (single-file, single-row-group fixtures
-    cannot split at the scan), but the r12 blanket defaultParallelism
-    spread regressed the suite ~130 s (32-task waves on kilobyte
-    tables; the driver's 8-core rerun beat 32-core). The width must be
-    max(floor 4, ceil(disk_bytes / target)) capped at
-    defaultParallelism: the floor keeps per-row compute stages over
-    small fact fixtures parallel (r13: 14 JSON/XML/edit-distance rungs
-    summed 17.7 s at floor 1 vs 9.2 s at floor 4, sub-second control
-    unchanged), the byte term grows with the data, and a 100 TB table
-    gets every core. Uses sf0.01
-    so the memo entry cannot collide with this suite's uncached SF_DIR
-    frames."""
-    import os
-
-    from aws_lambda_stream_processing_spark import tables as T
-
-    sf_dir = "/root/testdata/sf0.01"
-    had = os.environ.get("ALSP_CACHE_TABLES")
-    had_target = os.environ.get("ALSP_CACHE_SPREAD_TARGET_BYTES")
-    had_floor = os.environ.get("ALSP_CACHE_SPREAD_FLOOR")
-    os.environ["ALSP_CACHE_TABLES"] = "1"
-    # shrink the target so the 216 KB sf0.01 events fixture derives a
-    # byte-term width ABOVE the floor that the assertion can see
-    os.environ["ALSP_CACHE_SPREAD_TARGET_BYTES"] = str(32 * 1024)
-    try:
-        expect = T._spread_width(spark, f"{sf_dir}/events.parquet")
-        assert 4 < expect < spark.sparkContext.defaultParallelism
-        df = T.load_table(spark, sf_dir, "events")
-        assert df.rdd.getNumPartitions() == expect
-        # broadcast dims stay single-partition
-        dim = T.load_table(spark, sf_dir, "nation")
-        assert dim.rdd.getNumPartitions() == 1
-        # the derivation caps at the session's parallelism for data that
-        # outgrows it (the 100 TB posture)
-        os.environ["ALSP_CACHE_SPREAD_TARGET_BYTES"] = "1"
-        assert (
-            T._spread_width(spark, f"{sf_dir}/events.parquet")
-            == spark.sparkContext.defaultParallelism
-        )
-        # ... and small fact tables sit at the compute-parallelism floor
-        os.environ.pop("ALSP_CACHE_SPREAD_TARGET_BYTES")
-        assert T._spread_width(spark, f"{sf_dir}/customer.parquet") == 4
-        os.environ["ALSP_CACHE_SPREAD_FLOOR"] = "1"
-        assert T._spread_width(spark, f"{sf_dir}/customer.parquet") == 1
-    finally:
-        if had is None:
-            os.environ.pop("ALSP_CACHE_TABLES", None)
-        else:
-            os.environ["ALSP_CACHE_TABLES"] = had
-        if had_target is None:
-            os.environ.pop("ALSP_CACHE_SPREAD_TARGET_BYTES", None)
-        else:
-            os.environ["ALSP_CACHE_SPREAD_TARGET_BYTES"] = had_target
-        if had_floor is None:
-            os.environ.pop("ALSP_CACHE_SPREAD_FLOOR", None)
-        else:
-            os.environ["ALSP_CACHE_SPREAD_FLOOR"] = had_floor
-        app = spark.sparkContext.applicationId
-        for name in ("events", "nation"):
-            frame = T._MEMO.pop((app, sf_dir, name), None)
-            if frame is not None:
-                frame.unpersist()
-
-
 def test_degree_memo_shared_across_graph_family(spark, registry):
     """_degrees: the (node, degree) relation six graph rungs select
     probes from must be served from the family memo — one build per
@@ -232,17 +164,3 @@ def test_linkpred_never_broadcasts_the_adjacency(spark, registry):
                     name,
                     subtree,
                 )
-
-
-def test_py_state_width_derives_from_session(spark):
-    """py_state_width: the Python-stateful stream width must derive from
-    the session's parallelism (driver benches rerun at lower core
-    counts), floored at the JVM-state default and capped where
-    state-store instance overhead catches up."""
-    from aws_lambda_stream_processing_spark.streaming.replay import (
-        py_state_width,
-    )
-
-    w = int(py_state_width(spark))
-    cores = spark.sparkContext.defaultParallelism
-    assert w == max(4, min(cores, 16))

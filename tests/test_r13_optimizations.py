@@ -9,10 +9,9 @@ plan fails even while the oracle stays green:
   * q_llm_bigram_growth — bigrams zip adjacent array elements (no
     token-grain lag window) and rank + both cumsums share ONE range
     exchange via two_phase_rank_cumsums: WindowExec budget (r12 plan:
-    44 window nodes across the three chained passes; r13: 2);
-  * dprefix.derived_parts — the range-shuffle width derives from the
-    optimizer's size estimate (floor DEFAULT_PARTS locally, capped at
-    4x parallelism) instead of the fixed 8 (r12 verdict item 8).
+    44 window nodes across the three chained passes; r13: 2).
+
+The size-derived dprefix range width is gated in tests/test_widths.py.
 """
 
 from __future__ import annotations
@@ -47,22 +46,3 @@ def test_bigram_growth_single_range_pass(spark, registry):
     n_windows = len(re.findall(r"\(\d+\) Window\b", plan))
     assert n_windows <= 4, (n_windows, plan[:1500])
     assert "lag(" not in plan, plan[:1500]
-
-
-def test_dprefix_width_is_size_derived(spark):
-    """derived_parts: explicit width honored; small inputs floor at
-    DEFAULT_PARTS; estimate-derived width caps at 4x parallelism."""
-    from aws_lambda_stream_processing_spark.operators import dprefix as D
-
-    small = spark.range(100).toDF("k")
-    assert D.derived_parts(small, 5) == 5
-    assert D.derived_parts(small, None) == D.DEFAULT_PARTS
-    saved = D._PART_TARGET_BYTES
-    try:
-        # shrink the target so even the 100-row estimate outgrows it —
-        # the derivation must then hit the 4x-parallelism cap
-        D._PART_TARGET_BYTES = 1
-        cap = 4 * spark.sparkContext.defaultParallelism
-        assert D.derived_parts(small, None) == cap
-    finally:
-        D._PART_TARGET_BYTES = saved

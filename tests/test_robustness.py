@@ -361,13 +361,13 @@ def test_rocksdb_provider_engages_and_conf_restored(spark):
     snapshot/changelog ZIPs where the default HDFS provider writes
     .delta files — assert the .zip artifacts under an identically
     configured mini-run's checkpoint, and that the provider conf is
-    restored afterwards (the _conf_ctx contract)."""
+    restored afterwards (the conf_scope contract)."""
     import glob
     import shutil
 
     from pyspark.sql import functions as F
 
-    from aws_lambda_stream_processing_spark.operators.scale import _conf_ctx
+    from aws_lambda_stream_processing_spark.session import conf_scope
     from aws_lambda_stream_processing_spark.streaming.queries import (
         _ROCKSDB_PROVIDER,
     )
@@ -390,7 +390,7 @@ def test_rocksdb_provider_engages_and_conf_restored(spark):
         ).write.mode("overwrite").parquet(src)
         stream = spark.readStream.schema("k long, v long").parquet(src)
         agg = stream.groupBy("k").agg(F.sum("v").alias("s"))
-        with _conf_ctx(spark, {key: _ROCKSDB_PROVIDER}):
+        with conf_scope(spark, {key: _ROCKSDB_PROVIDER}):
             drain(
                 agg.writeStream.format("noop")
                 .outputMode("complete")
